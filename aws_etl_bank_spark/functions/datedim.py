@@ -25,6 +25,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from aws_etl_bank_spark.session import local_frame
+
 #: (month, day, name) fixed-date Vietnamese public holidays.
 _VN_FIXED_HOLIDAYS = [
     (1, 1, "International New Year's Day"),
@@ -51,7 +53,7 @@ def vn_holidays(spark: SparkSession, start_year: int, end_year: int,
     for r in rows[1:]:
         out = out.unionByName(r)
     if extra_holidays:
-        extra = spark.createDataFrame(extra_holidays, "holiday_date string, holiday_name string")
+        extra = local_frame(spark, extra_holidays, "holiday_date string, holiday_name string")
         out = out.unionByName(extra.select(F.to_date("holiday_date").alias("holiday_date"), "holiday_name"))
     return out
 

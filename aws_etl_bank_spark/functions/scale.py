@@ -20,6 +20,8 @@ import re
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from aws_etl_bank_spark.session import local_frame
+
 
 def with_salt(df: DataFrame, n_salts: int = 16, salt_col: str = "_salt",
               deterministic_by: str | Column | None = None) -> DataFrame:
@@ -961,8 +963,7 @@ def quantile_estimate(sketch: DataFrame, qs: list[float], lo: float,
          .withColumn("n", F.sum("cnt").over(
              Window.rowsBetween(Window.unboundedPreceding,
                                 Window.unboundedFollowing))))
-    probes = sketch.sparkSession.createDataFrame(
-        [(float(q),) for q in qs], "q double")
+    probes = local_frame(sketch.sparkSession, [(float(q),) for q in qs], "q double")
     j = F.broadcast(probes).crossJoin(c)
     r = (F.floor(F.col("q") * (F.col("n") - 1)) + 1).alias("r")
     picked = (j.select("q", "bin", "cnt", "cum", "cum_before", "n", r)
@@ -1240,7 +1241,7 @@ def bucketed_global_rank(df: DataFrame, score: Column | str,
             offsets.append((b, cum))
             cum += c
     spark = df.sparkSession
-    off_df = spark.createDataFrame(offsets, "__bgr_b int, __bgr_off long")
+    off_df = local_frame(spark, offsets, "__bgr_b int, __bgr_off long")
     order = [F.col("__bgr_s").desc() if descending
              else F.col("__bgr_s").asc()]
     order += [F.col(t).asc() for t in tie_cols]
@@ -1431,7 +1432,7 @@ def bucketed_cumsum(df: DataFrame, order_col: str,
             cum[v] += r[v]
     schema = "__bcs_b int, " + ", ".join(f"__bcs_off_{v} long"
                                          for v in value_cols)
-    off = df.sparkSession.createDataFrame(offsets, schema)
+    off = local_frame(df.sparkSession, offsets, schema)
     w = (Window.partitionBy("__bcs_b").orderBy(order_col)
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     out = t.join(F.broadcast(off), "__bcs_b")

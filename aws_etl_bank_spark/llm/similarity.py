@@ -13,6 +13,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from aws_etl_bank_spark.session import local_frame
+
 
 def _to_double(c: Column) -> Column:
     return F.transform(c, lambda x: x.cast("double"))
@@ -71,7 +73,7 @@ def train_centroids(corpus: DataFrame, n_cells: int = 16,
     feat = corpus.select(array_to_vector(_to_double(F.col(vec_col))).alias("features"))
     model = KMeans(k=n_cells, seed=seed, maxIter=max_iter, initMode="k-means||").fit(feat)
     rows = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    return corpus.sparkSession.createDataFrame(rows, "cell_id long, centroid array<double>")
+    return local_frame(corpus.sparkSession, rows, "cell_id long, centroid array<double>")
 
 
 def _l2sq(a: Column, b: Column) -> Column:

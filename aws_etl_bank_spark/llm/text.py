@@ -8,6 +8,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from aws_etl_bank_spark.session import local_frame
+
 #: Tiny per-language stopword profiles for the n-gram/stopword heuristic.
 #: Deliberately small and hard-coded: language ID at scale is a
 #: broadcast-joined profile table; these profiles match the testdata's
@@ -914,5 +916,5 @@ def bpe_train_merges(df: DataFrame, text_col: str = "text",
             .alias("seg"), "freq")
         wf = wf.localCheckpoint(eager=True)  # cut lineage; free the parent
         old.unpersist()
-    return df.sparkSession.createDataFrame(
-        merges, "rank int, pair string, merged string, cnt bigint")
+    return local_frame(df.sparkSession, merges,
+                       "rank int, pair string, merged string, cnt bigint")

@@ -33,6 +33,7 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from aws_etl_bank_spark import gluetypes as gt
+from aws_etl_bank_spark.session import local_frame
 
 _ERROR_SCHEMA = T.StructType(
     [
@@ -73,7 +74,7 @@ class ResolveOption:
 
 
 def _empty_errors(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], _ERROR_SCHEMA)
+    return local_frame(spark, [], _ERROR_SCHEMA)
 
 
 class DynamicFrame:
@@ -839,7 +840,7 @@ class DynamicFrameCollection:
         if key in self._frames:
             return self._frames[key]
         spark = next(iter(self._frames.values())).spark if self._frames else SparkSession.getActiveSession()
-        return DynamicFrame(spark.createDataFrame([], T.StructType([])), self.glue_ctx, key)
+        return DynamicFrame(local_frame(spark, [], T.StructType([])), self.glue_ctx, key)
 
     def map(self, callable_: Callable, transformation_ctx: str = "") -> "DynamicFrameCollection":
         return DynamicFrameCollection(

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from aws_etl_bank_spark.functions.columns import add_scd2_columns
 from aws_etl_bank_spark.functions.datedim import build_date_dim
 from aws_etl_bank_spark.functions.scale import widen_if_underscanned
+from aws_etl_bank_spark.session import local_frame
 
 #: payment-code → payment-type-name dim for the testdata mapping
 #: (plays the role of the reference's payment_type table, §1.3).
@@ -233,7 +234,7 @@ def prepare_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     supplier = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    ptype = spark.createDataFrame(RETURNFLAG_PAYMENT_TYPES, "type_code string, type_nm string")
+    ptype = local_frame(spark, RETURNFLAG_PAYMENT_TYPES, "type_code string, type_nm string")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(supplier), li.l_suppkey == supplier.s_suppkey)

@@ -16,7 +16,7 @@ import pyspark.sql.functions as F  # noqa: F401
 import pyspark.sql.types as T  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 
-from aws_etl_bank_spark.session import apply_runtime_confs  # noqa: F401
+from aws_etl_bank_spark.session import apply_runtime_confs, local_frame  # noqa: F401
 from aws_etl_bank_spark.sources.testdata import load_table  # noqa: F401
 from aws_etl_bank_spark.plans.registry import (  # noqa: F401
     REGISTRY, SCRATCH, canon0, q, _scratch)
@@ -420,8 +420,8 @@ def score_psi_drift(spark, sf_dir):
     tots: dict[str, int] = {}
     for row in c_rows:
         tots[row["pop"]] = tots.get(row["pop"], 0) + row["n"]
-    c = spark.createDataFrame(
-        [(row["pop"], int(row["bin"]), int(row["n"])) for row in c_rows],
+    c = local_frame(
+        spark, [(row["pop"], int(row["bin"]), int(row["n"])) for row in c_rows],
         "pop string, bin long, n long")
     bins = spark.range(10).select(F.col("id").alias("bin"))
     r = (c.filter(F.col("pop") == "ref")
@@ -498,7 +498,7 @@ def stream_heavy_hitters(spark, sf_dir):
             sf_dir, f"hh_ckpt_{int(_time.time() * 1000)}"),
         "availableNow": True,
     })
-    cand = spark.createDataFrame([(int(k),) for k in state], "key long")
+    cand = local_frame(spark, [(int(k),) for k in state], "key long")
     exact = (keyed(load_table(spark, sf_dir, "events"))
              .join(F.broadcast(cand), "key", "left_semi")
              .groupBy("key").agg(F.count(F.lit(1)).alias("cnt")))
@@ -1405,7 +1405,7 @@ def stream_ohlc_incremental(spark, sf_dir):
         T.StructField("o", key_t), T.StructField("high", T.DoubleType()),
         T.StructField("low", T.DoubleType()), T.StructField("c", key_t),
         T.StructField("n", T.LongType())])
-    parts = spark.createDataFrame(collected, schema)
+    parts = local_frame(spark, collected, schema)
     merged = (parts.groupBy("event_type", "bucket")
               .agg(F.expr("min_by(o, struct(o.ts, o.event_id))").alias("o"),
                    F.max("high").alias("high"), F.min("low").alias("low"),

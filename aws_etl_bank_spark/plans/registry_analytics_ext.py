@@ -13,7 +13,7 @@ import pyspark.sql.functions as F  # noqa: F401
 import pyspark.sql.types as T  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 
-from aws_etl_bank_spark.session import apply_runtime_confs  # noqa: F401
+from aws_etl_bank_spark.session import apply_runtime_confs, local_frame  # noqa: F401
 from aws_etl_bank_spark.sources.testdata import load_table  # noqa: F401
 from aws_etl_bank_spark.plans.registry import (  # noqa: F401
     REGISTRY, SCRATCH, canon0, q, _scratch)
@@ -276,8 +276,8 @@ def ops_observe_metrics(spark, sf_dir):
         F.sum((F.col("l_quantity") * 100).cast("long")).alias("qty_cents"))
     n_big = observed.filter(F.col("l_quantity") > 10).count()
     m = obs.get
-    return spark.createDataFrame(
-        [(m["n_rows"], m["qty_cents"], n_big)],
+    return local_frame(
+        spark, [(m["n_rows"], m["qty_cents"], n_big)],
         "n_rows long, qty_cents long, n_big long")
 
 
@@ -583,7 +583,7 @@ def catalog_equidepth_histogram(spark, sf_dir):
                                   out_col="rk")
     n = o.count()
     targets = [(i, (i * n + 7) // 8) for i in range(1, 9)]
-    t = spark.createDataFrame(targets, "q int, rk long")
+    t = local_frame(spark, targets, "q int, rk long")
     return (ranked.join(F.broadcast(t), "rk")
             .select("q", F.col("rk").cast("long").alias("rk"),
                     F.col("o_totalprice").alias("boundary")))
@@ -1869,15 +1869,12 @@ def stream_state_reader(spark, sf_dir):
 
     from aws_etl_bank_spark.plans.registry_llm import _events_stream_dir
     from aws_etl_bank_spark.sources.testdata import events_stream
+    from aws_etl_bank_spark.streaming.runner import run_to_memory
 
     stream = events_stream(spark, _events_stream_dir(sf_dir))
     counts = stream.groupBy("user_id").count()
     ck = _scratch(sf_dir, f"state_reader_ck_{int(_time.time() * 1000)}")
-    name = f"state_reader_{int(_time.time() * 1000) % 10_000_000}"
-    query = (counts.writeStream.format("memory").queryName(name)
-             .outputMode("update").option("checkpointLocation", ck)
-             .trigger(availableNow=True).start())
-    query.awaitTermination()
+    run_to_memory(counts, "state_reader", "update", checkpointLocation=ck)
     state = spark.read.format("statestore").load(ck)
     return state.select(F.col("key.user_id").alias("user_id"),
                         F.col("value.count").cast("long").alias("n_events"))

@@ -16,7 +16,7 @@ import pyspark.sql.functions as F  # noqa: F401
 import pyspark.sql.types as T  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 
-from aws_etl_bank_spark.session import apply_runtime_confs  # noqa: F401
+from aws_etl_bank_spark.session import apply_runtime_confs, local_frame  # noqa: F401
 from aws_etl_bank_spark.sources.testdata import load_table  # noqa: F401
 from aws_etl_bank_spark.plans.registry import (  # noqa: F401
     REGISTRY, SCRATCH, canon0, q, _scratch)
@@ -1352,7 +1352,7 @@ def partitions_after_repartition(spark, sf_dir):
 
     dyf = DynamicFrame.fromDF(load_table(spark, sf_dir, "nation"), None, "n")
     n = dyf.repartition(8).getNumPartitions()
-    return spark.createDataFrame([(n,)], "num_partitions long")
+    return local_frame(spark, [(n,)], "num_partitions long")
 
 
 @q("catalog_schema_fetch", """
@@ -1372,7 +1372,7 @@ def catalog_schema_fetch(spark, sf_dir):
                       os.path.join(sf_dir, "customer.parquet"))
     schema = ctx.get_catalog_schema_as_spark_schema("golden", "customer_c")
     rows = [(f.name, f.dataType.simpleString()) for f in schema.fields]
-    return spark.createDataFrame(rows, "col_name string, col_type string")
+    return local_frame(spark, rows, "col_name string, col_type string")
 
 # terminal registration stamp — see registry.check_parts_registered
 _REGISTERED_INTO = id(REGISTRY)

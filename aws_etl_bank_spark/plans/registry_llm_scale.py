@@ -10,6 +10,7 @@ import pyspark.sql.functions as F  # noqa: F401
 from pyspark.sql import Window  # noqa: F401
 
 from aws_etl_bank_spark.plans.registry import q  # noqa: F401
+from aws_etl_bank_spark.session import local_frame
 from aws_etl_bank_spark.sources.testdata import (  # noqa: F401
     events_stream, load_table)
 
@@ -673,7 +674,7 @@ def stream_quantile_sketch(spark, sf_dir):
     })
     schema = T.StructType([T.StructField("bin", T.LongType()),
                            T.StructField("cnt", T.LongType())])
-    merged = quantile_merge(spark.createDataFrame(collected, schema))
+    merged = quantile_merge(local_frame(spark, collected, schema))
     return quantile_estimate(merged, [0.1, 0.5, 0.9, 0.99],
                              0.0, 500.0, n_bins=250)
 
@@ -913,8 +914,8 @@ def embed_pca_planted_axis(spark, sf_dir):
     n, eigval, v, trace = pca_top_component(planted, "v", 64)
     u = np.full(64, 0.125)
     cos = abs(float(np.dot(v, u)))
-    return spark.createDataFrame(
-        [(n, 64, int(cos >= 0.99), int(eigval >= 0.5 * trace))],
+    return local_frame(
+        spark, [(n, 64, int(cos >= 0.99), int(eigval >= 0.5 * trace))],
         "n long, dim long, aligned int, dominant int")
 
 
@@ -1789,6 +1790,7 @@ def stream_state_store_read(spark, sf_dir):
     import time as _time
 
     from aws_etl_bank_spark.plans.registry import _scratch
+    from aws_etl_bank_spark.streaming.runner import run_to_memory
 
     stamp = int(_time.time() * 1000)
     ck = _scratch(sf_dir, f"state_reader_ck_{stamp}")
@@ -1812,12 +1814,7 @@ def stream_state_store_read(spark, sf_dir):
     agg = (stream
            .select((F.col("user_id") % 101).cast("bigint").alias("k"))
            .groupBy("k").agg(F.count(F.lit(1)).alias("n")))
-    name = f"ssr_mem_{stamp % 10_000_000}"
-    query = (agg.writeStream.format("memory").queryName(name)
-             .outputMode("complete")
-             .option("checkpointLocation", ck)
-             .trigger(availableNow=True).start())
-    query.awaitTermination()
+    run_to_memory(agg, "ssr_mem", "complete", checkpointLocation=ck)
 
     meta = spark.read.format("state-metadata").load(ck)
     ops = [r.operatorName for r in meta.select("operatorName").collect()]

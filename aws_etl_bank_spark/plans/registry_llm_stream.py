@@ -10,8 +10,10 @@ import pyspark.sql.functions as F  # noqa: F401
 from pyspark.sql import Window  # noqa: F401
 
 from aws_etl_bank_spark.plans.registry import q  # noqa: F401
+from aws_etl_bank_spark.session import local_frame
 from aws_etl_bank_spark.sources.testdata import (  # noqa: F401
     events_stream, load_table)
+from aws_etl_bank_spark.streaming.runner import run_to_memory, take_memory_sink
 
 # Direct-import tripwire (shared body) — see
 # registry.require_part_loading.
@@ -60,20 +62,11 @@ def stream_window_counts(spark, sf_dir):
     """Watermarked tumbling-window aggregation executed as a real
     Structured Streaming query (availableNow → memory sink), so the
     streaming path itself is under the correctness gate."""
-    import time as _time
-
     from aws_etl_bank_spark.streaming import windowed_event_counts
 
     stream = events_stream(spark, _events_stream_dir(sf_dir))
     agg = windowed_event_counts(stream, "6 hours", watermark="12 hours")
-    name = f"stream_win_{int(_time.time() * 1000) % 10_000_000}"
-    query = (
-        agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(availableNow=True).start()
-    )
-    query.awaitTermination()
-    result = spark.table(name).collect()
-    return spark.createDataFrame(result, spark.table(name).schema)
+    return run_to_memory(agg, "stream_win", "complete")
 
 
 @q("stream_sessionize", """
@@ -115,20 +108,12 @@ def stream_stateful_counts(spark, sf_dir):
     micro-batches, update-mode memory sink.  The cumulative count is
     batch-partitioning-invariant — max per user == total — so the result
     is oracle-checkable despite the streaming execution."""
-    import time as _time
-
     from aws_etl_bank_spark.streaming import stateful_user_counts
 
     stream = events_stream(spark, _events_stream_dir(sf_dir))
     counts = stateful_user_counts(stream)
-    name = f"stateful_counts_{int(_time.time() * 1000) % 10_000_000}"
-    query = (
-        counts.writeStream.format("memory").queryName(name)
-        .outputMode("update").trigger(availableNow=True).start()
-    )
-    query.awaitTermination()
     return (
-        spark.table(name)
+        run_to_memory(counts, "stateful_counts", "update")
         .groupBy("user_id")
         .agg(F.max("n_events").alias("n_events"))
     )
@@ -154,8 +139,6 @@ def stream_tws_running_totals(spark, sf_dir):
     n_events) equals the batch aggregate.  State lives in the store —
     per key only two int64s round-trip per batch — so state scales
     with keys, not events: the 100 TB unbounded-stream shape."""
-    import time as _time
-
     from aws_etl_bank_spark.streaming.tws import (
         ROCKSDB_PROVIDER, ensure_worker_protobuf, running_user_totals_tws)
 
@@ -167,17 +150,14 @@ def stream_tws_running_totals(spark, sf_dir):
     try:
         stream = events_stream(spark, _events_stream_dir(sf_dir))
         totals = running_user_totals_tws(stream)
-        name = f"tws_totals_{int(_time.time() * 1000) % 10_000_000}"
-        query = (totals.writeStream.format("memory").queryName(name)
-                 .outputMode("update").trigger(availableNow=True).start())
-        query.awaitTermination()
+        sunk = run_to_memory(totals, "tws_totals", "update")
     finally:
         if prev is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         else:
             spark.conf.set("spark.sql.streaming.stateStore.providerClass",
                            prev)
-    return (spark.table(name).groupBy("user_id")
+    return (sunk.groupBy("user_id")
             .agg(F.max("n_events").alias("n_events"),
                  F.max_by("cents", "n_events").alias("cents")))
 
@@ -235,7 +215,7 @@ def stream_pyds_shard_source(spark, sf_dir):
             break
         _time.sleep(0.5)
     query.stop()
-    return (spark.table(name).groupBy("user_id")
+    return (take_memory_sink(spark, name).groupBy("user_id")
             .agg(F.count("*").alias("n_events"),
                  F.sum("cents").alias("cents")))
 
@@ -299,8 +279,6 @@ def stream_tws_minmax_rows(spark, sf_dir):
     iterators at the Python boundary: per-user running (min, max,
     count).  Completes the TWS API matrix next to the three pandas
     entries; same max-marker final-state contract."""
-    import time as _time
-
     from aws_etl_bank_spark.streaming.tws import (
         ROCKSDB_PROVIDER, ensure_worker_protobuf, user_minmax_tws_rows)
 
@@ -312,17 +290,14 @@ def stream_tws_minmax_rows(spark, sf_dir):
     try:
         stream = events_stream(spark, _events_stream_dir(sf_dir))
         mm = user_minmax_tws_rows(stream)
-        name = f"tws_mm_{int(_time.time() * 1000) % 10_000_000}"
-        query = (mm.writeStream.format("memory").queryName(name)
-                 .outputMode("update").trigger(availableNow=True).start())
-        query.awaitTermination()
+        sunk = run_to_memory(mm, "tws_mm", "update")
     finally:
         if prev is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         else:
             spark.conf.set("spark.sql.streaming.stateStore.providerClass",
                            prev)
-    return (spark.table(name).groupBy("user_id")
+    return (sunk.groupBy("user_id")
             .agg(F.max_by("lo", "n_events").alias("lo"),
                  F.max_by("hi", "n_events").alias("hi"),
                  F.max("n_events").alias("n_events")))
@@ -348,8 +323,6 @@ def stream_tws_topk_list(spark, sf_dir):
     (rank, cents) pairs are deterministic under ties (equal values get
     consecutive ranks), so the DuckDB row_number oracle hash-matches
     despite its arbitrary tie ordering."""
-    import time as _time
-
     from aws_etl_bank_spark.streaming.tws import (
         ROCKSDB_PROVIDER, ensure_worker_protobuf, user_topk_values_tws)
 
@@ -361,10 +334,7 @@ def stream_tws_topk_list(spark, sf_dir):
     try:
         stream = events_stream(spark, _events_stream_dir(sf_dir))
         topk = user_topk_values_tws(stream, k=3)
-        name = f"tws_topk_{int(_time.time() * 1000) % 10_000_000}"
-        query = (topk.writeStream.format("memory").queryName(name)
-                 .outputMode("update").trigger(availableNow=True).start())
-        query.awaitTermination()
+        sunk = run_to_memory(topk, "tws_topk", "update")
     finally:
         if prev is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -373,7 +343,6 @@ def stream_tws_topk_list(spark, sf_dir):
                            prev)
     from pyspark.sql import Window as W
 
-    sunk = spark.table(name)
     mx = F.max("n_seen").over(W.partitionBy("user_id"))
     return (sunk.withColumn("_mx", mx)
             .where(F.col("n_seen") == F.col("_mx"))
@@ -392,8 +361,6 @@ def stream_tws_type_counts_map(spark, sf_dir):
     vendored protobuf codec.  Each batch emits the user's whole
     current map with an n_seen marker; max-n_seen rows per user are
     the final counts, batch-split-invariant."""
-    import time as _time
-
     from aws_etl_bank_spark.streaming.tws import (
         ROCKSDB_PROVIDER, ensure_worker_protobuf, user_type_counts_tws)
 
@@ -405,10 +372,7 @@ def stream_tws_type_counts_map(spark, sf_dir):
     try:
         stream = events_stream(spark, _events_stream_dir(sf_dir))
         counts = user_type_counts_tws(stream)
-        name = f"tws_map_{int(_time.time() * 1000) % 10_000_000}"
-        query = (counts.writeStream.format("memory").queryName(name)
-                 .outputMode("update").trigger(availableNow=True).start())
-        query.awaitTermination()
+        sunk = run_to_memory(counts, "tws_map", "update")
     finally:
         if prev is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -417,7 +381,6 @@ def stream_tws_type_counts_map(spark, sf_dir):
                            prev)
     from pyspark.sql import Window as W
 
-    sunk = spark.table(name)
     mx = F.max("n_seen").over(W.partitionBy("user_id"))
     return (sunk.withColumn("_mx", mx)
             .where(F.col("n_seen") == F.col("_mx"))
@@ -462,7 +425,7 @@ def stream_foreach_batch(spark, sf_dir):
         T.StructField("n", T.LongType()),
         T.StructField("sv", T.DoubleType()),
     ])
-    per_batch = spark.createDataFrame(collected, schema)
+    per_batch = local_frame(spark, collected, schema)
     return per_batch.groupBy("event_type").agg(
         F.sum("n").alias("n"), F.round(F.sum("sv"), 2).alias("sv")
     )
@@ -893,8 +856,6 @@ def stream_stream_join(spark, sf_dir):
     dropped and the append-mode result equals the batch inequality
     join DuckDB computes.  At scale the watermark horizon — not stream
     length — bounds the join state (streaming/joins.py)."""
-    import time as _time
-
     from aws_etl_bank_spark.streaming.joins import stream_interval_join
 
     stream_dir = _events_stream_dir(sf_dir)
@@ -913,14 +874,7 @@ def stream_stream_join(spark, sf_dir):
         "click_id", "user_id", F.col("ts").alias("click_ts"),
         "purchase_id", F.col("ts_r").alias("purchase_ts"), "value")
 
-    name = f"stream_ssj_{int(_time.time() * 1000) % 10_000_000}"
-    query = (
-        joined.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    query.awaitTermination()
-    result = spark.table(name).collect()
-    return spark.createDataFrame(result, spark.table(name).schema)
+    return run_to_memory(joined, "stream_ssj", "append")
 
 
 @q("stream_dedup_ids", """
@@ -932,8 +886,6 @@ def stream_dedup_ids(spark, sf_dir):
     the exactly-once ingestion pattern.  Exact-mode here (bounded
     replay); the watermarked horizon variant
     (dropDuplicatesWithinWatermark) is unit-tested."""
-    import time as _time
-
     from aws_etl_bank_spark.streaming.joins import stream_dedup
 
     stream_dir = _events_stream_dir(sf_dir)
@@ -944,14 +896,7 @@ def stream_dedup_ids(spark, sf_dir):
 
     doubled = mkstream().unionByName(mkstream())
     deduped = stream_dedup(doubled, ["event_id"])
-    name = f"stream_dd_{int(_time.time() * 1000) % 10_000_000}"
-    query = (
-        deduped.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    query.awaitTermination()
-    result = spark.table(name).collect()
-    return spark.createDataFrame(result, spark.table(name).schema)
+    return run_to_memory(deduped, "stream_dd", "append")
 
 
 @q("mix_upsample_by_weight", """
@@ -1060,8 +1005,6 @@ def stream_static_enrich(spark, sf_dir):
     enrich_with_static) run as a REAL streaming query: events stream ⋈
     broadcast nation dim (stateless, no watermark needed) → complete-mode
     aggregate → memory sink.  Oracle is the batch equivalent."""
-    import time as _time
-
     from aws_etl_bank_spark.streaming.joins import enrich_with_static
 
     stream = (events_stream(spark, _events_stream_dir(sf_dir))
@@ -1073,14 +1016,7 @@ def stream_static_enrich(spark, sf_dir):
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("sum_value"),
     )
-    name = f"stream_enrich_{int(_time.time() * 1000) % 10_000_000}"
-    query = (
-        agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(availableNow=True).start()
-    )
-    query.awaitTermination()
-    result = spark.table(name).collect()
-    return spark.createDataFrame(result, spark.table(name).schema)
+    return run_to_memory(agg, "stream_enrich", "complete")
 
 
 def _semantic_pair_invariants(pairs, emb, threshold):

@@ -16,7 +16,7 @@ import pyspark.sql.functions as F  # noqa: F401
 import pyspark.sql.types as T  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 
-from aws_etl_bank_spark.session import apply_runtime_confs  # noqa: F401
+from aws_etl_bank_spark.session import apply_runtime_confs, local_frame  # noqa: F401
 from aws_etl_bank_spark.sources.testdata import load_table  # noqa: F401
 from aws_etl_bank_spark.plans.registry import (  # noqa: F401
     REGISTRY, SCRATCH, canon0, q, _scratch)
@@ -125,8 +125,8 @@ def count_actions(spark, sf_dir):
 
     out = DynamicFrame.fromDF(cust, None, "c").map(
         fn, schema=T.StructType([T.StructField("c_custkey", T.LongType())]))
-    return spark.createDataFrame(
-        [(out.count(), out.errorsCount(), out.stageErrorsCount())],
+    return local_frame(
+        spark, [(out.count(), out.errorsCount(), out.stageErrorsCount())],
         "ok_count long, errors_count long, stage_errors_count long")
 
 
@@ -692,8 +692,8 @@ def testdata_schema_smoke(spark, sf_dir):
         for c, dt in load_table(spark, sf_dir, t).dtypes:
             norm = "timestamp" if dt in ("timestamp", "timestamp_ntz") else dt
             rows.append((t, c, norm))
-    return spark.createDataFrame(
-        rows, "table_name string, column_name string, dtype string")
+    return local_frame(
+        spark, rows, "table_name string, column_name string, dtype string")
 
 
 @q("funnel_view_click_purchase", """
@@ -2982,7 +2982,7 @@ def stream_kmv_distinct(spark, sf_dir):
         "availableNow": True,
     })
     schema = T.StructType([T.StructField("h", T.LongType())])
-    merged = (spark.createDataFrame(collected, schema)
+    merged = (local_frame(spark, collected, schema)
               .distinct().orderBy("h").limit(256))
     est = kmv_estimate(merged, k=256)
     tru = (load_table(spark, sf_dir, "events")

@@ -16,9 +16,14 @@ posture explicit and add the knobs that matter at 100 TB:
 
 from __future__ import annotations
 
+import logging
 import os
 
-from pyspark.sql import SparkSession
+import pyspark.sql.types as T
+from pyspark.errors import PySparkException
+from pyspark.sql import DataFrame, SparkSession
+
+log = logging.getLogger(__name__)
 
 #: Runtime confs applied both at build time and (idempotently) to sessions
 #: handed to us by an external driver.  All are runtime-settable.
@@ -61,22 +66,46 @@ RUNTIME_CONFS = {
     # checkpoints on checksummed local/HDFS storage, where the integrity
     # re-check adds nothing; with this off, repeated streaming runs
     # measure flat (2.9-3.0 s) instead of drifting up (3.4→4.0+ s).
-    # Durable always-on streams on non-checksummed object stores should
-    # re-enable it per query via writeStream options.
+    # It is a SQLConf, not a writeStream option: a durable always-on
+    # stream on a non-checksummed object store re-enables it with
+    # spark.conf.set(...) before its query starts.
     "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
 }
 
 
-def apply_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Apply the engine's runtime confs to an externally-built session."""
+def apply_runtime_confs(spark: SparkSession) -> list[str]:
+    """Apply the engine's runtime confs to an externally-built session.
+
+    Returns (and logs) the keys this session refused; the queries avoid
+    depending on any single optional conf, so a refusal is not fatal."""
+    skipped = []
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            # Conf not settable at runtime in this build — keep going; the
-            # queries themselves avoid depending on any single optional conf.
-            pass
-    return spark
+        except PySparkException as e:
+            log.warning("runtime conf %s=%s not applied: %s", k, v, e)
+            skipped.append(k)
+    return skipped
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` for driver-side rows, sent
+    as one Arrow table: it plans as a JVM ``LocalRelation`` that runs no
+    job and no Python worker, where a Python list becomes a pickled
+    ``PythonRDD`` (``Scan ExistingRDD``) that forks a worker per
+    partition every time the frame is read.  Rows may be tuples, Rows or
+    dicts; values convert exactly as ``createDataFrame`` converts them
+    (``StructType.toInternal``: naive datetimes are local time)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*(schema.toInternal(r) for r in rows))) or [()] * len(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(columns, arrow_schema)], schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
 
 
 def get_spark(
@@ -118,4 +147,5 @@ def get_spark(
     for k, v in (extra_confs or {}).items():
         builder = builder.config(k, str(v))
     spark = builder.getOrCreate()
-    return apply_runtime_confs(spark)
+    apply_runtime_confs(spark)
+    return spark

@@ -35,6 +35,8 @@ from pyspark.sql.datasource import (DataSource, DataSourceStreamArrowWriter,
                                     DataSourceStreamWriter, InputPartition,
                                     WriterCommitMessage)
 
+from aws_etl_bank_spark.session import local_frame
+
 
 def prepare_shards(df, path: str, shards: int, order_col: str) -> int:
     """Materialize a deterministic sharded stream feed: row r goes to
@@ -304,7 +306,7 @@ def read_manifest_sink(spark, path: str, schema_ddl: str):
         files.extend(os.path.join(path, "data", name)
                      for name in meta["files"])
     if not files:
-        return spark.createDataFrame([], schema_ddl)
+        return local_frame(spark, [], schema_ddl)
     if files[0].endswith(".parquet"):        # Arrow sink variant
         return spark.read.schema(schema_ddl).parquet(*files)
     return spark.read.schema(schema_ddl).json(files)

@@ -86,10 +86,29 @@ def for_each_batch(frame: DataFrame, batch_function, options: dict):
     return metrics
 
 
+def take_memory_sink(spark: SparkSession, name: str) -> DataFrame:
+    """The memory sink ``name`` as a batch frame, its view dropped: the
+    frame keeps the sink's analysed plan (a ``LocalTableScan``), and no
+    session-lifetime view keeps the sink alive after the frame is gone."""
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
+
+
+def run_to_memory(frame: DataFrame, name_prefix: str, mode: str, **options) -> DataFrame:
+    """Run a streaming ``frame`` to completion (availableNow) into a memory
+    sink in output ``mode`` and return the sink (``take_memory_sink``)."""
+    name = f"{name_prefix}_{int(time.time() * 1000) % 10_000_000}"
+    (frame.writeStream.format("memory").queryName(name).outputMode(mode)
+     .options(**options).trigger(availableNow=True).start().awaitTermination())
+    return take_memory_sink(frame.sparkSession, name)
+
+
 def sample_streaming_frame(spark: SparkSession, frame: DataFrame, options: dict,
                            batch_function=None) -> DataFrame:
     """Reference context.py:553-599: run the stream into an in-memory
-    table, poll up to recordPollingLimit rows, stop, return a batch frame."""
+    table, poll up to recordPollingLimit rows, stop, return a batch frame
+    over the stopped sink."""
     window_size = _parse_window_size(options.get("windowSize", "1 seconds"))
     polling_ms = int(options.get("pollingTimeInMs", 10000))
     limit = int(options.get("recordPollingLimit", 100))
@@ -104,13 +123,12 @@ def sample_streaming_frame(spark: SparkSession, frame: DataFrame, options: dict,
             if spark.sql(f"select * from {table} limit {limit}").count() >= limit:
                 break
             time.sleep(0.2)
-        out = spark.sql(f"select * from {table} limit {limit}")
-        rows = out.collect()
     finally:
         query.stop()
-    if batch_function is not None and rows:
-        batch_function(spark.createDataFrame(rows, out.schema))
-    return spark.createDataFrame(rows, out.schema)
+    out = take_memory_sink(spark, table).limit(limit)
+    if batch_function is not None and not out.isEmpty():
+        batch_function(out)
+    return out
 
 
 # ---------------------------------------------------------------------------

@@ -211,12 +211,15 @@ def main():
     headline2 = [n for n in HEADLINE2 if n in subset] if subset else HEADLINE2
     # Warmup: one tiny-sf pass per headline query primes the JVM, codegen
     # cache, and file-source metadata so the timed numbers reflect
-    # steady-state execution rather than first-query startup cost.
+    # steady-state execution rather than first-query startup cost.  A
+    # warm-up failure does not stop the run (the timed pass raises if the
+    # query is really broken) but is recorded in the full artifact.
+    warmup_errors: dict[str, str] = {}
     for name in headline + headline2:
         try:
             qs[name](spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
-        except Exception:
-            pass
+        except Exception as e:
+            warmup_errors[name] = f"{type(e).__name__}: {e}"
     # Probe fence (r9 verdict task 5, extended per r10 task 6): a
     # calibration probe runs between every interleaved pass, so each
     # pass total is bracketed by its own probe pair and a judge can
@@ -305,6 +308,7 @@ def main():
         # unchanged): per-query samples in RUN ORDER, see above
         "samples_chrono": samples_chrono,
         "samples2_chrono": samples2_chrono,
+        "warmup_errors": warmup_errors,
     }
     # Full result (per-query samples + spreads) goes to a repo file: the
     # driver's stdout tail capture is ~2000 chars and r5's line outgrew

@@ -8,7 +8,10 @@ Counted per entry: plan lines, Exchange nodes (total and
 REPARTITION-tagged), SortMergeJoin / ShuffledHashJoin /
 BroadcastHashJoin / BroadcastNestedLoopJoin / CartesianProduct,
 BatchEvalPython / ArrowEvalPython / MapInPandas (FlatMapGroupsInPandas)
-/ MapInArrow nodes, and whether the scan shows PushedFilters.
+/ MapInArrow nodes, Scan ExistingRDD leaves (an RDD-backed relation:
+either a checkpoint, or driver rows pickled into a Python RDD that runs
+a Python worker per partition on every read), and whether the scan
+shows PushedFilters.
 
 Usage: python scripts/plan_scan.py [sf_dir] [out_json]
 """
@@ -22,7 +25,7 @@ import sys
 import time
 import traceback
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 PATTERNS = {
@@ -37,6 +40,7 @@ PATTERNS = {
     "arrow_eval_python": re.compile(r"\bArrowEvalPython\b"),
     "map_in_pandas": re.compile(r"\b(MapInPandas|FlatMapGroupsInPandas)\b"),
     "map_in_arrow": re.compile(r"\b(MapInArrow|PythonMapInArrow)\b"),
+    "existing_rdd": re.compile(r"\bScan ExistingRDD\b"),
 }
 
 
@@ -84,11 +88,14 @@ def main():
             "arrow_eval_python": sum(v["arrow_eval_python"] for v in ok.values()),
             "map_in_pandas": sum(v["map_in_pandas"] for v in ok.values()),
             "map_in_arrow": sum(v["map_in_arrow"] for v in ok.values()),
+            "existing_rdd": sum(v["existing_rdd"] for v in ok.values()),
         },
         "entries_with_batch_eval_python": sorted(
             k for k, v in ok.items() if v["batch_eval_python"]),
         "entries_with_cartesian": sorted(
             k for k, v in ok.items() if v["cartesian"]),
+        "entries_with_existing_rdd": sorted(
+            k for k, v in ok.items() if v["existing_rdd"]),
         "top_plan_lines": sorted(
             ((k, v["plan_lines"]) for k, v in ok.items()),
             key=lambda kv: -kv[1])[:15],

@@ -871,3 +871,14 @@ def test_session_pins_checkpoint_file_checksum_off():
 
     assert RUNTIME_CONFS[
         "spark.sql.streaming.checkpoint.fileChecksum.enabled"] == "false"
+
+
+def test_apply_runtime_confs_reports_refused_confs(spark, monkeypatch, caplog):
+    """A conf the session refuses is returned and logged, not swallowed."""
+    from aws_etl_bank_spark import session
+
+    assert session.apply_runtime_confs(spark) == []
+    monkeypatch.setitem(session.RUNTIME_CONFS, "spark.sql.warehouse.dir", "/nonexistent")
+    with caplog.at_level("WARNING", logger="aws_etl_bank_spark.session"):
+        assert session.apply_runtime_confs(spark) == ["spark.sql.warehouse.dir"]
+    assert "spark.sql.warehouse.dir" in caplog.text

@@ -134,10 +134,10 @@ def test_bench_stdout_compact_line_is_last(tmp_path):
         "SPARK_GRAFT_BENCH_QUERIES":
             "join_multiway_sql,stream_window_counts,stream_cdc_scd2",
     })
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     proc = subprocess.run(
-        [os.sys.executable, "/root/repo/bench.py"],
-        capture_output=True, text=True, timeout=900, env=env,
-        cwd="/root/repo")
+        [os.sys.executable, os.path.join(repo, "bench.py")],
+        capture_output=True, text=True, timeout=900, env=env, cwd=repo)
     assert proc.returncode == 0, proc.stderr[-2000:]
     out_lines = [ln for ln in proc.stdout.splitlines() if ln.strip()]
     assert out_lines, "bench printed nothing"
@@ -154,6 +154,9 @@ def test_bench_stdout_compact_line_is_last(tmp_path):
     frames = [ln for ln in proc.stderr.splitlines()
               if ln.startswith("\tat ") or "DAGScheduler" in ln]
     assert frames == [], frames[:5]
+    # a warm-up failure is recorded in the full artifact, not swallowed
+    with open(os.path.join(repo, "bench_out", "BENCH_subset.json")) as f:
+        assert json.load(f)["warmup_errors"] == {}
 
 
 def test_duplicate_registry_name_raises():
