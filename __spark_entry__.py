@@ -33,8 +33,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # new): the last rows-only family — dedup_minhash_pairs/keep,
 # dedup_simhash_pairs, dedup_semantic_pairs_full — converted to
 # invariant-contract oracles in r17, making the registry 395/395
-# oracle-backed.  The 4 displaced r9 entries join the remaining 14 as
-# the r18 head (comment below).  Rotation policy (r14 task 3):
+# oracle-backed.  Entries after slot 50 follow in name order, not in
+# the order their modules register them.  Rotation policy (r14 task 3):
 # rows-only entries are EXCLUDED from the window (a slot spent on one
 # reports err:"no_oracle" — wasted attestation); _registry() asserts
 # this below.
@@ -70,25 +70,16 @@ _PRIORITY = [
     # first look (r15-conversion precedent)
     "dedup_minhash_pairs", "dedup_minhash_keep", "dedup_simhash_pairs",
     "dedup_semantic_pairs_full",
-    # ---- 50-slot waterline: dedup_semantic_pairs_full is slot 50
-    # r18 head: the 4 displaced + remaining 14 r9-vintage entries,
-    # registry order (agg_gini_concentration, multimodal_decode_ppm,
-    #  multimodal_thumbnail_vec, sample_bottomk_hash,
-    #  graph_triangle_count, sample_weighted_priority,
-    #  feature_hash_text, scale_heavy_hitters, embed_pca_planted_axis,
-    #  sample_per_group_bottomk, multimodal_decode_wav,
-    #  embed_jl_projection, dedup_substring_remove,
-    #  ann_ivf_index_persisted, text_word_pmi,
-    #  multimodal_audio_spectrum, graph_common_neighbors,
-    #  dedup_cluster_sizes), then the r10-vintage block
+    # ---- 50-slot waterline: dedup_semantic_pairs_full is slot 50;
+    # every entry after it follows in name order (_registry below)
 ]
 
 
 def _registry():
-    import aws_etl_bank_spark.plans.registry as reg
-    import aws_etl_bank_spark.plans.registry_llm  # noqa: F401  (populates REGISTRY)
+    """The registry in driver order: the _PRIORITY names, then every
+    other entry sorted by name."""
+    from aws_etl_bank_spark.plans.registry import REGISTRY as full
 
-    full = reg.REGISTRY
     # a stale/typo'd slot name would otherwise vanish SILENTLY, shifting
     # every later entry up one slot and costing a round of driver
     # evidence unnoticed — the counterpart of the @q duplicate guard
@@ -118,7 +109,7 @@ def _registry():
             "driver cannot adjudicate them — rotate their oracle-backed "
             "planted companions instead")
     ordered = {name: full[name] for name in _PRIORITY}
-    ordered.update(full)
+    ordered.update(sorted(full.items()))
     return ordered
 
 

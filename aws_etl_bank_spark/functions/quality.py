@@ -14,7 +14,7 @@ band is acceptable at scale.
 
 Output is long-format ``(metric string, value double)`` so a suite of N
 metrics is N rows, stable for regression snapshots and the DuckDB
-oracle (plans/registry.py: quality_metrics_orders).
+oracle (plans/registry_sources_sketches.py: quality_metrics_orders).
 """
 
 from __future__ import annotations

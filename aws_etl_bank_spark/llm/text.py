@@ -606,7 +606,7 @@ def dsir_select(raw: DataFrame, target: DataFrame, text_col: str = "text",
     Both rounded outputs are SIGNED (log-likelihood ratios sum either
     way; the Gumbel shift is unbounded below), so a score in
     (-5e-5, 0) rounds to IEEE ``-0.0`` — canonicalized to ``+0.0`` on
-    both engines (plans/registry.py canon0 rationale).
+    both engines (plans/query.py canon0 rationale).
 
     .. note:: **Assignment change (r5):** the Gumbel term inherited
        hash_split's bounded-pmod rewrite — selections differ from prior

@@ -1,0 +1,88 @@
+"""The ``@q`` decorator and the dict it fills: one named entry per
+implemented operator (SURVEY.md §2), each with a Spark callable
+``(spark, sf_dir) -> DataFrame`` and — where SQL-expressible — a DuckDB
+oracle over the same parquet tables.
+
+This module imports no entry module, so every entry module can import
+it first.  ``plans/registry.py`` is the loader that imports them all.
+
+Conventions keeping Spark and DuckDB hash-comparable:
+- every computed column is aliased identically on both sides;
+- double aggregates are ROUND(x, 2/4) on both sides (raw doubles from
+  parquet pass through untouched);
+- DuckDB ``sum(int)`` is cast to BIGINT and ``year()``-family to INTEGER
+  to match Spark's types;
+- arrays are sorted and joined to strings before comparison.
+
+Scratch writes (CSV round-trip, partitioned-catalog fixtures, spigot)
+go under ``.scratch/`` in the repo.
+"""
+
+from __future__ import annotations
+
+import os
+from dataclasses import dataclass
+from typing import Callable
+
+import pyspark.sql.functions as F
+from pyspark.sql import DataFrame, SparkSession
+
+from aws_etl_bank_spark.session import apply_runtime_confs
+
+SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
+
+
+@dataclass
+class QuerySpec:
+    fn: Callable[[SparkSession, str], DataFrame]
+    oracle: str | None
+
+
+REGISTRY: dict[str, QuerySpec] = {}
+
+
+def q(name: str, oracle: str | None = None):
+    def deco(fn):
+        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
+            apply_runtime_confs(spark)
+            return fn(spark, sf_dir)
+
+        # a name collision silently SHADOWS the earlier entry (dict
+        # write wins) and its driver evidence — caught live in r13
+        # when a draft re-used ops_observe_metrics; make it loud
+        if name in REGISTRY:
+            raise ValueError(
+                f"duplicate registry entry {name!r}: a second @q would "
+                "silently shadow the first (and its driver evidence); "
+                "pick a new name or delete the old entry explicitly")
+        REGISTRY[name] = QuerySpec(wrapped, oracle)
+        return wrapped
+
+    return deco
+
+
+def canon0(c) -> "F.Column":
+    """Canonicalize IEEE ``-0.0`` → ``+0.0`` on a rounded SIGNED double.
+
+    The driver's value hash is bitwise, so ``ROUND()`` of a tiny
+    negative (a delta, slope, z-score, log-ratio — anything built from
+    subtraction) can emit ``-0.0`` on one engine and ``+0.0`` on the
+    other and mismatch even though the values compare equal (the r5
+    ``ts_trend_slope`` failure).  ``x + 0.0`` maps either zero to
+    ``+0.0``; apply it — with a matching ``+ 0`` in the oracle SQL — to
+    EVERY rounded output column whose pre-round value can be negative.
+    Audited r7: all base testdata measures are strictly positive
+    (events.value, *_price, quantities), so sums/avgs/EWMAs/medians of
+    them cannot round to -0.0; the signed-output entries are
+    ``ts_trend_slope`` (slope/corr), ``ts_rolling_zscore*`` (z),
+    ``win_lag_delta`` (difference of float sums), and
+    ``llm_dsir_select`` (log-likelihood ratios, Gumbel scores) — all
+    carry this canonicalization on both engines."""
+    return c + F.lit(0.0)
+
+
+def _scratch(sf_dir: str, leaf: str) -> str:
+    tag = os.path.basename(os.path.normpath(sf_dir))
+    path = os.path.join(SCRATCH, tag, leaf)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    return path

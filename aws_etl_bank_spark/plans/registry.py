@@ -1,181 +1,18 @@
-"""Query registry: one named entry per implemented operator (SURVEY.md §2),
-each with a Spark callable ``(spark, sf_dir) -> DataFrame`` and — where
-SQL-expressible — a DuckDB oracle over the same parquet tables.
+"""Query registry loader: importing this module registers every entry.
 
-Conventions keeping Spark and DuckDB hash-comparable:
-- every computed column is aliased identically on both sides;
-- double aggregates are ROUND(x, 2/4) on both sides (raw doubles from
-  parquet pass through untouched);
-- DuckDB ``sum(int)`` is cast to BIGINT and ``year()``-family to INTEGER
-  to match Spark's types;
-- arrays are sorted and joined to strings before comparison.
-
-Scratch writes (CSV round-trip, partitioned-catalog fixtures, spigot)
-go under ``.scratch/`` in the repo.
+``@q``, ``REGISTRY`` and the helpers live in the leaf module
+``plans/query.py``; the entries live in the eight family modules below.
+Each family module imports only the leaf (and, for shared helpers,
+another family module), so they can be imported in any order.  The
+order of ``REGISTRY`` carries no meaning: ``__spark_entry__._registry()``
+sets the order the driver sees.
 """
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass
-from typing import Callable
-
-import pyspark.sql.functions as F
-import pyspark.sql.types as T
-from pyspark.sql import DataFrame, SparkSession, Window
-
-from aws_etl_bank_spark.session import apply_runtime_confs
-from aws_etl_bank_spark.sources.testdata import load_table
-
-SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
-
-
-@dataclass
-class QuerySpec:
-    fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None
-
-
-REGISTRY: dict[str, QuerySpec] = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def deco(fn):
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            apply_runtime_confs(spark)
-            return fn(spark, sf_dir)
-
-        # a name collision silently SHADOWS the earlier entry (dict
-        # write wins) and its driver evidence — caught live in r13
-        # when a draft re-used ops_observe_metrics; make it loud
-        if name in REGISTRY:
-            raise ValueError(
-                f"duplicate registry entry {name!r}: a second @q would "
-                "silently shadow the first (and its driver evidence); "
-                "pick a new name or delete the old entry explicitly")
-        REGISTRY[name] = QuerySpec(wrapped, oracle)
-        return wrapped
-
-    return deco
-
-
-def canon0(c) -> "F.Column":
-    """Canonicalize IEEE ``-0.0`` → ``+0.0`` on a rounded SIGNED double.
-
-    The driver's value hash is bitwise, so ``ROUND()`` of a tiny
-    negative (a delta, slope, z-score, log-ratio — anything built from
-    subtraction) can emit ``-0.0`` on one engine and ``+0.0`` on the
-    other and mismatch even though the values compare equal (the r5
-    ``ts_trend_slope`` failure).  ``x + 0.0`` maps either zero to
-    ``+0.0``; apply it — with a matching ``+ 0`` in the oracle SQL — to
-    EVERY rounded output column whose pre-round value can be negative.
-    Audited r7: all base testdata measures are strictly positive
-    (events.value, *_price, quantities), so sums/avgs/EWMAs/medians of
-    them cannot round to -0.0; the signed-output entries are
-    ``ts_trend_slope`` (slope/corr), ``ts_rolling_zscore*`` (z),
-    ``win_lag_delta`` (difference of float sums), and
-    ``llm_dsir_select`` (log-likelihood ratios, Gumbel scores) — all
-    carry this canonicalization on both engines."""
-    return c + F.lit(0.0)
-
-
-def _scratch(sf_dir: str, leaf: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(SCRATCH, tag, leaf)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    return path
-
-
-def require_part_loading(part_name: str, orchestrator, flag: str,
-                         sanctioned: str =
-                         "aws_etl_bank_spark.plans.registry") -> None:
-    """Shared direct-import tripwire body (ADVICE r15; deduplicated
-    from nine copy-pasted blocks per the r16 review): every registry
-    part/subpart module calls this right after its imports and aborts
-    unless its orchestrator is currently executing its fixed import
-    sequence.  A directly-imported part would otherwise register its
-    entries after the other parts' and silently reorder REGISTRY,
-    which the driver rotation window and the COVERAGE.md ledger index
-    into.  ``sanctioned`` names the import the message should steer
-    the user to — registry_llm parts load via plans.registry_llm, NOT
-    plans.registry (whose load would silently omit every llm entry)."""
-    if not getattr(orchestrator, flag, False):
-        raise ImportError(
-            f"{part_name} must not be imported directly: its entries "
-            f"would register out of order; import {sanctioned} instead")
-
-
-def check_parts_registered(module_names: list[str], registry_id: int,
-                           sanctioned: str =
-                           "aws_etl_bank_spark.plans.registry") -> None:
-    """Post-import completeness check (r16 review finding 1): a part
-    import that was aborted mid-execution (tripwire, syntax error,
-    import-probe `except ImportError: pass`) leaves a PARTIAL module
-    in sys.modules; an orchestrator that then finishes would be cached
-    complete-but-truncated — later imports would silently get a
-    REGISTRY missing that part's entries.  Every part stamps
-    ``_REGISTERED_INTO = id(REGISTRY)`` as its LAST statement; a
-    missing or stale stamp (a part cached from a previous failed
-    attempt registered into a dead dict) fails the orchestrator load
-    itself, so the truncated state can never be cached."""
-    import sys as _sys
-
-    for name in module_names:
-        mod = _sys.modules.get(name)
-        if mod is None or getattr(mod, "_REGISTERED_INTO", None) != registry_id:
-            raise ImportError(
-                f"{name} did not finish registering into this REGISTRY "
-                "(partial import or stale residue from a failed "
-                "direct-import attempt); restart the process and import "
-                f"{sanctioned} first")
-
-
-def reject_partial_parts(module_names: list[str],
-                         sanctioned: str =
-                         "aws_etl_bank_spark.plans.registry") -> None:
-    """Pre-import guard (r16 review finding 2): if a part module is
-    ALREADY mid-execution when the orchestrator starts, the user
-    imported that part directly and the orchestrator's own import of a
-    sibling part would die on a confusing partially-initialized-module
-    error (the sibling's cross-part import of names the partial module
-    has not defined yet).  Detect the state up front and raise the
-    intended diagnostic instead."""
-    import sys as _sys
-
-    for name in module_names:
-        mod = _sys.modules.get(name)
-        if mod is not None and getattr(mod, "_REGISTERED_INTO", None) is None:
-            raise ImportError(
-                f"{name} is mid-import: part modules must not be "
-                f"imported directly; import {sanctioned} instead")
-
-
-# Entry definitions live in four part modules (pure mechanical split,
-# r15, VERDICT r14 task 8) imported here IN ORIGINAL LINE ORDER so
-# REGISTRY's insertion order — which the driver rotation window and
-# the COVERAGE.md ledger reference — is identical to the single-file
-# layout.  The @q duplicate guard makes any accidental double
-# registration loud.
-#
-# _LOADING_PARTS is the direct-import tripwire (ADVICE r15): each part
-# module calls require_part_loading() and aborts unless this flag is
-# True, which it only is while the imports below are executing.  The
-# reject_partial_parts / check_parts_registered pair (r16 review)
-# makes the failure mode loud and uncacheable in BOTH directions: a
-# part already mid-import fails fast with the intended message, and a
-# part that aborted mid-execution fails the orchestrator load itself
-# instead of leaving a truncated REGISTRY cached in sys.modules.
-_PART_MODULES = [
-    "aws_etl_bank_spark.plans.registry_core",
-    "aws_etl_bank_spark.plans.registry_sources_sketches",
-    "aws_etl_bank_spark.plans.registry_analytics",
-    "aws_etl_bank_spark.plans.registry_dialect",
-]
-reject_partial_parts(_PART_MODULES)
-_LOADING_PARTS = True
-from aws_etl_bank_spark.plans import registry_core  # noqa: E402,F401
-from aws_etl_bank_spark.plans import registry_sources_sketches  # noqa: E402,F401
-from aws_etl_bank_spark.plans import registry_analytics  # noqa: E402,F401
-from aws_etl_bank_spark.plans import registry_dialect  # noqa: E402,F401
-_LOADING_PARTS = False
-check_parts_registered(_PART_MODULES, id(REGISTRY))
+from aws_etl_bank_spark.plans import (  # noqa: F401
+    registry_analytics_core, registry_analytics_ext, registry_core,
+    registry_dialect, registry_llm_corpus, registry_llm_scale,
+    registry_llm_stream, registry_sources_sketches)
+from aws_etl_bank_spark.plans.query import (  # noqa: F401
+    REGISTRY, SCRATCH, QuerySpec, _scratch, canon0, q)

@@ -1,9 +1,4 @@
-"""Analytics registry subpart 2: rolling medians, OHLC siblings,
-quality, avro ingest, catalog stats, null-safe joins and the later
-analytics surfaces (formerly registry_analytics.py lines 2019-4025).
-Pure mechanical move — see subpart 1's docstring for the split
-contract.
-"""
+"""Registry entries: rolling medians, OHLC siblings, quality, avro ingest, catalog stats, null-safe joins and later analytics surfaces."""
 
 from __future__ import annotations
 
@@ -15,15 +10,9 @@ from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 
 from aws_etl_bank_spark.session import apply_runtime_confs, local_frame  # noqa: F401
 from aws_etl_bank_spark.sources.testdata import load_table  # noqa: F401
-from aws_etl_bank_spark.plans.registry import (  # noqa: F401
+from aws_etl_bank_spark.plans.query import (  # noqa: F401
     REGISTRY, SCRATCH, canon0, q, _scratch)
 
-# Direct-import tripwire (shared body) — see
-# registry.require_part_loading.
-from aws_etl_bank_spark.plans import registry as _registry_mod  # noqa: E402
-from aws_etl_bank_spark.plans import registry_analytics as _an_mod  # noqa: E402
-
-_registry_mod.require_part_loading(__name__, _an_mod, "_LOADING_SUBPARTS")
 
 @q("ts_rolling_median_k7", """
 WITH l AS (
@@ -605,10 +594,7 @@ def src_python_datasource(spark, sf_dir):
 
     from aws_etl_bank_spark.sources.pyds import PyArrowParquetDataSource
 
-    try:
-        spark.dataSource.register(PyArrowParquetDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(PyArrowParquetDataSource)
     return (spark.read.format("pyarrow_parquet")
             .option("path", os.path.join(sf_dir, "supplier.parquet"))
             .option("columns", "s_suppkey,s_nationkey,s_acctbal,s_name")
@@ -629,10 +615,7 @@ def src_python_datasource_writer(spark, sf_dir):
     bugs in the writer fail the hash."""
     from aws_etl_bank_spark.sources.pyds import PyArrowParquetDataSource
 
-    try:
-        spark.dataSource.register(PyArrowParquetDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(PyArrowParquetDataSource)
     df = (load_table(spark, sf_dir, "orders")
           .where(F.col("o_orderkey") % 7 == 0)
           .select("o_orderkey", "o_custkey", "o_totalprice",
@@ -709,7 +692,7 @@ def arrow_udf_scalar(spark, sf_dir):
     import pyarrow.compute as pc
     from pyspark.sql.functions import arrow_udf
 
-    # NOTE: real pa.Array annotations, not strings — registry.py runs
+    # NOTE: real pa.Array annotations, not strings — this module runs
     # under `from __future__ import annotations`, which would turn
     # hints into strings and trip arrow_udf's signature check, so the
     # hints are attached explicitly.
@@ -1867,7 +1850,7 @@ def stream_state_reader(spark, sf_dir):
     store's shuffle partitions, O(keys) rows."""
     import time as _time
 
-    from aws_etl_bank_spark.plans.registry_llm import _events_stream_dir
+    from aws_etl_bank_spark.plans.registry_llm_stream import _events_stream_dir
     from aws_etl_bank_spark.sources.testdata import events_stream
     from aws_etl_bank_spark.streaming.runner import run_to_memory
 
@@ -1904,10 +1887,7 @@ def src_pyds_filter_pushdown(spark, sf_dir):
 
     from aws_etl_bank_spark.sources.pyds import PyArrowParquetDataSource
 
-    try:
-        spark.dataSource.register(PyArrowParquetDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(PyArrowParquetDataSource)
     return (spark.read.format("pyarrow_parquet")
             .option("path", os.path.join(sf_dir, "orders.parquet"))
             .load()
@@ -2027,6 +2007,3 @@ def sql_scripting_while_loop(spark, sf_dir):
           END WHILE;
           SELECT n AS n_orders, cents AS total_cents;
         END""")
-
-# terminal registration stamp — see registry.check_parts_registered
-_REGISTERED_INTO = id(REGISTRY)

@@ -1,32 +1,17 @@
-"""LLM registry part 3: graph algorithms, text statistics, sampling,
-sketches, trainers, arrow-native and late streaming surfaces (formerly
-registry_llm.py lines 2617-4431).  Pure mechanical move — see part 1's
-docstring for the split contract.
-"""
+"""Registry entries: graph algorithms, text statistics, sampling, sketches, trainers, Arrow-native and late streaming surfaces."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F  # noqa: F401
 from pyspark.sql import Window  # noqa: F401
 
-from aws_etl_bank_spark.plans.registry import q  # noqa: F401
+from aws_etl_bank_spark.plans.query import _scratch, q
 from aws_etl_bank_spark.session import local_frame
 from aws_etl_bank_spark.sources.testdata import (  # noqa: F401
     events_stream, load_table)
+from aws_etl_bank_spark.plans.registry_llm_corpus import _planted_corpus
+from aws_etl_bank_spark.plans.registry_llm_stream import _events_stream_dir
 
-# Direct-import tripwire (shared body) — see
-# registry.require_part_loading.
-from aws_etl_bank_spark.plans import registry as _registry_mod  # noqa: E402
-from aws_etl_bank_spark.plans import registry_llm as _llm_mod  # noqa: E402
-
-_registry_mod.require_part_loading(
-    __name__, _llm_mod, "_LOADING_PARTS",
-    sanctioned="aws_etl_bank_spark.plans.registry_llm")
-
-from aws_etl_bank_spark.plans.registry_llm_corpus import (  # noqa: E402,F401
-    _planted_corpus)
-from aws_etl_bank_spark.plans.registry_llm_stream import (  # noqa: E402,F401
-    _events_stream_dir)
 
 @q("graph_pagerank", """
 WITH e AS (SELECT DISTINCT o.o_custkey AS c, l.l_suppkey + 1000000 AS s
@@ -162,7 +147,6 @@ def stream_incremental_dedup(spark, sf_dir):
     (all 25 must be rejected by the cross-batch index join)."""
     import time as _time
 
-    from aws_etl_bank_spark.plans.registry import _scratch
     from aws_etl_bank_spark.streaming.incremental_dedup import (
         stream_dedup_against_index)
 
@@ -656,7 +640,6 @@ def stream_quantile_sketch(spark, sf_dir):
     from aws_etl_bank_spark.functions.scale import (quantile_estimate,
                                                     quantile_merge)
     from aws_etl_bank_spark.functions.scale import quantile_sketch as qsk
-    from aws_etl_bank_spark.plans.registry import _scratch
     from aws_etl_bank_spark.streaming import for_each_batch
 
     stream = events_stream(spark, _events_stream_dir(sf_dir))
@@ -1123,7 +1106,6 @@ def ann_ivf_index_persisted(spark, sf_dir):
     plan."""
     from aws_etl_bank_spark.llm.similarity import (ivf_index_topk,
                                                    ivf_index_write)
-    from aws_etl_bank_spark.plans.registry import _scratch
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     queries = emb.filter(F.col("vec_id") < 5)
@@ -1736,14 +1718,10 @@ def stream_pyds_arrow_sink(spark, sf_dir):
     the batch aggregate)."""
     import time as _time
 
-    from aws_etl_bank_spark.plans.registry import _scratch
     from aws_etl_bank_spark.sources.pyds_stream import (
         ShardedStreamDataSource, read_manifest_sink)
 
-    try:
-        spark.dataSource.register(ShardedStreamDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(ShardedStreamDataSource)
     stream = events_stream(spark, _events_stream_dir(sf_dir)).select(
         "event_id", "user_id",
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
@@ -1789,7 +1767,6 @@ def stream_state_store_read(spark, sf_dir):
     import shutil as _shutil
     import time as _time
 
-    from aws_etl_bank_spark.plans.registry import _scratch
     from aws_etl_bank_spark.streaming.runner import run_to_memory
 
     stamp = int(_time.time() * 1000)
@@ -1842,7 +1819,3 @@ def stream_state_store_read(spark, sf_dir):
     return (st.select(
         F.col("key.k").alias("k"),
         F.col(f"value.{value_field}").cast("bigint").alias("n")))
-
-# terminal registration stamp — see registry.check_parts_registered
-from aws_etl_bank_spark.plans.registry import REGISTRY as _REGISTRY_DICT  # noqa: E402
-_REGISTERED_INTO = id(_REGISTRY_DICT)

@@ -1,30 +1,16 @@
-"""LLM registry part 2: streaming, curation pipeline, as-of/range
-joins, BM25, CDC, semantic dedup, fuzzy entity resolution (formerly
-registry_llm.py lines 973-2615).  Pure mechanical move — see part 1's
-docstring for the split contract.
-"""
+"""Registry entries: streaming, curation pipeline, as-of/range joins, BM25, CDC, semantic dedup and fuzzy entity resolution."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F  # noqa: F401
 from pyspark.sql import Window  # noqa: F401
 
-from aws_etl_bank_spark.plans.registry import q  # noqa: F401
+from aws_etl_bank_spark.plans.query import _scratch, q
 from aws_etl_bank_spark.session import local_frame
 from aws_etl_bank_spark.sources.testdata import (  # noqa: F401
     events_stream, load_table)
 from aws_etl_bank_spark.streaming.runner import run_to_memory, take_memory_sink
-
-# Direct-import tripwire (shared body) — see
-# registry.require_part_loading.
-from aws_etl_bank_spark.plans import registry as _registry_mod  # noqa: E402
-from aws_etl_bank_spark.plans import registry_llm as _llm_mod  # noqa: E402
-
-_registry_mod.require_part_loading(
-    __name__, _llm_mod, "_LOADING_PARTS",
-    sanctioned="aws_etl_bank_spark.plans.registry_llm")
-
-from aws_etl_bank_spark.plans.registry_llm_corpus import (  # noqa: E402,F401
+from aws_etl_bank_spark.plans.registry_llm_corpus import (
     _ANN_K, _ANN_TOPK_INVARIANT_ORACLE, _EN, _ann_topk_invariants)
 
 # ===========================================================================
@@ -36,8 +22,6 @@ def _events_stream_dir(sf_dir: str) -> str:
     """Spark's file stream source needs a directory; expose events.parquet
     through a scratch dir symlink."""
     import os
-
-    from aws_etl_bank_spark.plans.registry import _scratch
 
     d = _scratch(sf_dir, "events_stream/ignored").rsplit("/", 1)[0]
     link = os.path.join(d, "events.parquet")
@@ -182,14 +166,10 @@ def stream_pyds_shard_source(spark, sf_dir):
     slice misalignment) fail the hash."""
     import time as _time
 
-    from aws_etl_bank_spark.plans.registry import _scratch
     from aws_etl_bank_spark.sources.pyds_stream import (
         ShardedStreamDataSource, prepare_shards)
 
-    try:
-        spark.dataSource.register(ShardedStreamDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(ShardedStreamDataSource)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id",
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
@@ -239,14 +219,10 @@ def stream_pyds_manifest_sink(spark, sf_dir):
     the batch aggregate."""
     import time as _time
 
-    from aws_etl_bank_spark.plans.registry import _scratch
     from aws_etl_bank_spark.sources.pyds_stream import (
         ShardedStreamDataSource, read_manifest_sink)
 
-    try:
-        spark.dataSource.register(ShardedStreamDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(ShardedStreamDataSource)
     stream = events_stream(spark, _events_stream_dir(sf_dir)).select(
         "event_id", "user_id",
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
@@ -400,7 +376,6 @@ def stream_foreach_batch(spark, sf_dir):
 
     import pyspark.sql.types as T
 
-    from aws_etl_bank_spark.plans.registry import _scratch
     from aws_etl_bank_spark.streaming import for_each_batch
 
     stream = events_stream(spark, _events_stream_dir(sf_dir))
@@ -1247,7 +1222,6 @@ def stream_cdc_scd2(spark, sf_dir):
     per-batch history semantics are asserted in tests/test_streaming.py."""
     import time as _time
 
-    from aws_etl_bank_spark.plans.registry import _scratch
     from aws_etl_bank_spark.streaming.cdc import cdc_apply_scd2
 
     from aws_etl_bank_spark.sources.testdata import write_ordered_feed
@@ -1650,7 +1624,3 @@ def dedup_fuzzy_entity_planted(spark, sf_dir):
                                 on_nonconverged="raise").select(
         F.col("id").cast("long").alias("id"),
         F.col("component").cast("long").alias("component"))
-
-# terminal registration stamp — see registry.check_parts_registered
-from aws_etl_bank_spark.plans.registry import REGISTRY as _REGISTRY_DICT  # noqa: E402
-_REGISTERED_INTO = id(_REGISTRY_DICT)

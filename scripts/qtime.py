@@ -53,8 +53,9 @@ def main() -> None:
         try:
             fn(spark, "/root/testdata/sf0.001").write.format("noop") \
                 .mode("overwrite").save()
-        except Exception:
-            pass
+        except Exception as e:
+            print(f"warmup {name} failed: {type(e).__name__}: {e}",
+                  file=sys.stderr, flush=True)
         if explain_prefix:
             df = fn(spark, sf_dir)
             txt = df._sc._jvm.PythonSQLUtils.explainString(

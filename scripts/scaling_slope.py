@@ -61,8 +61,9 @@ def main():
         try:
             qs[name](spark, "/root/testdata/sf0.001") \
                 .write.format("noop").mode("overwrite").save()
-        except Exception:
-            pass
+        except Exception as e:
+            print(f"warmup {name} failed: {type(e).__name__}: {e}",
+                  file=sys.stderr, flush=True)
 
     probes = [bench.calibration_probe(spark)]
     small: dict[str, list[float]] = {n: [] for n in names}

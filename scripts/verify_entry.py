@@ -19,12 +19,13 @@ Usage: python scripts/verify_entry.py [sf_dir] [name_filter ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import datetime as dt
 
 import duckdb
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod  # noqa: E402

@@ -227,7 +227,6 @@ def test_new_sampling_and_rollup_plan_shape(spark):
     (TakeOrderedAndProject), never a global sort; ts_active_users_7d
     must broadcast the day dimension and contain no nested-loop join
     (the naive interval-join form would be one)."""
-    import aws_etl_bank_spark.plans.registry_llm  # noqa: F401
     from aws_etl_bank_spark.plans.registry import REGISTRY
 
     sf = "/root/testdata/sf0.001"
@@ -245,7 +244,6 @@ def test_triangle_fixture_invariants(spark):
     """One lazy plan: every join is a hash equi-join except the two
     bounded single-row count cross-joins; the planted hub must close
     some but not most edges."""
-    import aws_etl_bank_spark.plans.registry_llm  # noqa: F401
     from aws_etl_bank_spark.plans.registry import REGISTRY
 
     df = REGISTRY["graph_triangle_count"].fn(spark, "/root/testdata/sf0.001")
@@ -275,7 +273,6 @@ def test_velocity_windows_share_one_exchange_and_sort(spark):
 def test_per_group_sample_uses_window_group_limit(spark):
     """The rank<=k filter must push into WindowGroupLimit so map tasks
     forward only k rows per group before the shuffle."""
-    import aws_etl_bank_spark.plans.registry_llm  # noqa: F401
     from aws_etl_bank_spark.plans.registry import REGISTRY
 
     p = REGISTRY["sample_per_group_bottomk"].fn(spark, "/root/testdata/sf0.001") \
@@ -289,7 +286,6 @@ def test_ols_matches_numpy(spark):
     the same features (independent solver, same data)."""
     import numpy as np
 
-    import aws_etl_bank_spark.plans.registry_llm  # noqa: F401
     from aws_etl_bank_spark.plans.registry import REGISTRY
     from aws_etl_bank_spark.sources.testdata import load_table
     import pyspark.sql.functions as F
@@ -314,7 +310,6 @@ def test_interval_overlap_no_nested_loop(spark):
     """The banded interval-overlap join must stay a hash equi-join on
     (day, bucket) — a BroadcastNestedLoopJoin means the non-equi form
     leaked through."""
-    import aws_etl_bank_spark.plans.registry_llm  # noqa: F401
     from aws_etl_bank_spark.plans.registry import REGISTRY
 
     p = REGISTRY["join_interval_overlap"].fn(spark, "/root/testdata/sf0.001") \

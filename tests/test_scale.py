@@ -727,7 +727,6 @@ def test_bitmap_retention_equals_exact_counts(spark):
     an approximation."""
     import pyspark.sql.functions as F
 
-    import aws_etl_bank_spark.plans.registry_llm  # noqa: F401
     from aws_etl_bank_spark.plans.registry import REGISTRY
     from aws_etl_bank_spark.sources.testdata import load_table
 
@@ -847,7 +846,6 @@ def test_compaction_reduces_file_count(spark):
     size-targeted handful out (tiny table → exactly 1), data identical."""
     import os
 
-    import aws_etl_bank_spark.plans.registry_llm  # noqa: F401
     from aws_etl_bank_spark.plans.registry import REGISTRY, _scratch
 
     sf = "/root/testdata/sf0.001"

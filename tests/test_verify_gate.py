@@ -10,9 +10,11 @@ sign-aware behavior so that class of local-green/driver-red can't recur.
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from scripts.verify_entry import norm_value  # noqa: E402
 
@@ -124,7 +126,6 @@ def test_bench_stdout_compact_line_is_last(tmp_path):
     (the trace source) and pin that the compact JSON line is the LAST
     line of stdout and that stderr carries no stack frames."""
     import json
-    import os
     import subprocess
 
     env = dict(os.environ)
@@ -134,10 +135,9 @@ def test_bench_stdout_compact_line_is_last(tmp_path):
         "SPARK_GRAFT_BENCH_QUERIES":
             "join_multiway_sql,stream_window_counts,stream_cdc_scd2",
     })
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     proc = subprocess.run(
-        [os.sys.executable, os.path.join(repo, "bench.py")],
-        capture_output=True, text=True, timeout=900, env=env, cwd=repo)
+        [sys.executable, os.path.join(REPO, "bench.py")],
+        capture_output=True, text=True, timeout=900, env=env, cwd=REPO)
     assert proc.returncode == 0, proc.stderr[-2000:]
     out_lines = [ln for ln in proc.stdout.splitlines() if ln.strip()]
     assert out_lines, "bench printed nothing"
@@ -155,7 +155,7 @@ def test_bench_stdout_compact_line_is_last(tmp_path):
               if ln.startswith("\tat ") or "DAGScheduler" in ln]
     assert frames == [], frames[:5]
     # a warm-up failure is recorded in the full artifact, not swallowed
-    with open(os.path.join(repo, "bench_out", "BENCH_subset.json")) as f:
+    with open(os.path.join(REPO, "bench_out", "BENCH_subset.json")) as f:
         assert json.load(f)["warmup_errors"] == {}
 
 
@@ -271,7 +271,6 @@ def test_fuzzy_ed1_blocked_oracle_equals_brute_force():
     from a brute-force pair set inside the same DuckDB session and
     assert bitwise-equal results at the driver SF."""
     import aws_etl_bank_spark.plans.registry as reg
-    import aws_etl_bank_spark.plans.registry_llm  # noqa: F401
 
     con = _duck_sf0_01()
     shipped = con.sql(
@@ -309,7 +308,6 @@ def test_fuzzy_entity_oracle_converged_and_matches_recursive():
        closure over the brute-force O(n²) levenshtein edge set, which
        is still tractable at the driver SF (500 nodes)."""
     import aws_etl_bank_spark.plans.registry as reg
-    import aws_etl_bank_spark.plans.registry_llm  # noqa: F401
 
     oracle = reg.REGISTRY["dedup_fuzzy_entity_ids"].oracle
     assert oracle.rstrip().endswith("FROM l10")
@@ -336,35 +334,38 @@ def test_fuzzy_entity_oracle_converged_and_matches_recursive():
     assert shipped == recursive
 
 
-def test_registry_part_modules_reject_direct_import():
-    """ADVICE r15: importing a part module directly still *worked* but
-    registered its entries after the other parts', silently reordering
-    REGISTRY (which the driver rotation window and COVERAGE.md ledger
-    index into).  The prohibition was docstring-only; now each part
-    raises ImportError unless registry.py's _LOADING_PARTS sentinel is
-    set.  Needs a clean interpreter (the modules are already imported
-    in this test process), hence the subprocess."""
+def test_registry_entry_modules_import_in_any_order():
+    """Importing any one entry module first gives the same
+    ``queries()`` — the same names in the same order — as the normal
+    path, and ``plans.registry`` alone holds every entry.  Each import
+    needs a clean interpreter (the modules are already loaded in this
+    test process), hence one subprocess per module."""
+    import glob
+    import json
     import subprocess
-    import sys
 
-    proc = subprocess.run(
-        [sys.executable, "-c",
-         "import sys; sys.path.insert(0, '/root/repo'); "
-         "import aws_etl_bank_spark.plans.registry_dialect"],
-        capture_output=True, text=True, timeout=120)
-    assert proc.returncode != 0
-    assert "must not be imported directly" in proc.stderr
+    import __spark_entry__ as entrymod
 
-    # and the sanctioned path still yields the full registry
-    proc = subprocess.run(
-        [sys.executable, "-c",
-         "import sys; sys.path.insert(0, '/root/repo'); "
-         "import aws_etl_bank_spark.plans.registry as r; "
-         "import aws_etl_bank_spark.plans.registry_llm; "
-         "print(len(r.REGISTRY))"],
-        capture_output=True, text=True, timeout=120)
-    assert proc.returncode == 0, proc.stderr[-500:]
-    assert int(proc.stdout.strip()) >= 395
+    def run(code):
+        proc = subprocess.run(
+            [sys.executable, "-c",
+             f"import json, sys; sys.path.insert(0, {REPO!r}); {code}"],
+            capture_output=True, text=True, timeout=120, cwd=REPO)
+        assert proc.returncode == 0, proc.stderr[-500:]
+        return json.loads(proc.stdout.strip().splitlines()[-1])
+
+    expected = list(entrymod.queries())
+    modules = sorted(
+        os.path.basename(p)[:-3] for p in glob.glob(os.path.join(
+            REPO, "aws_etl_bank_spark", "plans", "registry_*.py")))
+    assert len(modules) == 8, modules
+    for mod in modules:
+        got = run(f"import aws_etl_bank_spark.plans.{mod}; "
+                  "import __spark_entry__ as e; "
+                  "print(json.dumps(list(e.queries())))")
+        assert got == expected, mod
+    assert run("import aws_etl_bank_spark.plans.registry as r; "
+               "print(len(r.REGISTRY))") == len(expected) == 395
 
 
 def test_fuzzy_entity_oracle_converged_at_audit_scale():
@@ -375,16 +376,13 @@ def test_fuzzy_entity_oracle_converged_at_audit_scale():
     .scratch/sf1 fixture whenever it exists (it is regenerated every
     round), in ONE query so the shared CTE chain executes once: count
     of nodes whose round-9 and round-10 labels differ must be 0."""
-    import os
-
     import duckdb
     import pytest
 
-    sf1 = "/root/repo/.scratch/sf1/customer.parquet"
+    sf1 = os.path.join(REPO, ".scratch", "sf1", "customer.parquet")
     if not os.path.exists(sf1):
         pytest.skip("no .scratch/sf1 fixture on this box")
     import aws_etl_bank_spark.plans.registry as reg
-    import aws_etl_bank_spark.plans.registry_llm  # noqa: F401
 
     oracle = reg.REGISTRY["dedup_fuzzy_entity_ids"].oracle
     assert oracle.rstrip().endswith("FROM l10")
